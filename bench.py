@@ -76,7 +76,9 @@ def _host_load(a: dict | None, b: dict | None, wall: float) -> dict:
 # attempt was contended it self-marks {"contended": true} so no reader
 # can mistake the number for a quiet-window measurement.
 STEAL_RETRY_PCT = 1.0
-MAX_ATTEMPTS = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_ATTEMPTS", "3"))
+# at least one attempt: with none there is no sweep to pick from, and
+# the bench would crash before writing its artifact
+MAX_ATTEMPTS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_MAX_ATTEMPTS", "3")))
 
 
 def _contention_verdict(

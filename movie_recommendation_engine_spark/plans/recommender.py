@@ -8,7 +8,13 @@ the reference left at defaults (SURVEY §7.3):
 
 - ``num_blocks`` (user/item blocking — ALS cost is block-to-block
   shuffles, 2 per iteration; size blocks so a factor block fits in
-  executor memory);
+  executor memory).  None = MLlib's default of 10, capped at the
+  session's cores: every block is one task per ALS stage, a saved
+  part-file per factor matrix, and one Python task in the top-k
+  kernel that reads the factors, so blocks beyond the cores only add
+  per-task cost.  The count comes from the core count, never from the
+  input's partitioning, so the same ratings fit the same factors
+  however they were read;
 - ``checkpoint_interval`` (lineage truncation — without it, long
   iteration chains blow up the DAG at scale);
 - seed (the reference relied on the default).
@@ -129,7 +135,7 @@ class AlsRecommender:
     # the Arrow/BLAS kernel for BOTH cases (see recommend_top_k)
     _loaded: bool = field(default=False, repr=False)
 
-    def _estimator(self):
+    def _estimator(self, train: DataFrame):
         from pyspark.ml.recommendation import ALS
 
         kwargs = dict(
@@ -146,13 +152,17 @@ class AlsRecommender:
             seed=self.seed,
             checkpointInterval=self.checkpoint_interval,
         )
-        if self.num_blocks is not None:
-            kwargs["numUserBlocks"] = self.num_blocks
-            kwargs["numItemBlocks"] = self.num_blocks
-        return ALS(**kwargs)
+        als = ALS(**kwargs)
+        blocks = self.num_blocks
+        if blocks is None:
+            # the train frame's context, not getActiveSession(): the
+            # latter is None in pool threads (the CLI's verb fan-out)
+            cores = train.sparkSession.sparkContext.defaultParallelism
+            blocks = min(als.getNumUserBlocks(), cores)
+        return als.setNumUserBlocks(blocks).setNumItemBlocks(blocks)
 
     def fit(self, train: DataFrame) -> "AlsRecommender":
-        self.model = self._estimator().fit(train)
+        self.model = self._estimator(train).fit(train)
         self._loaded = False
         return self
 
@@ -373,7 +383,7 @@ class AlsRecommender:
         from pyspark.ml.evaluation import RegressionEvaluator
         from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
-        als = self._estimator()
+        als = self._estimator(train)
         grid = (
             ParamGridBuilder()
             .addGrid(als.rank, list(ranks))

@@ -157,7 +157,7 @@ def q_movielens_e2e_cli(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-user-window jobs becoming partition-pruned parquet scans
     # (round-9 judge defect #1: the cache-leak fix exposed the
     # re-splits as a ~1.7x e2e regression).
-    from concurrent.futures import ThreadPoolExecutor
+    from ..fanout import fan_out
 
     cli_main(["split", "--ratings", csv_path, "--out", split_dir])
     # popularity and als are INDEPENDENT consumers of the split verb's
@@ -169,23 +169,15 @@ def q_movielens_e2e_cli(spark: SparkSession, sf_dir: str) -> DataFrame:
     # over its own parquet read; job descriptions are thread-local.
     # Overlapped, the verb pair costs ~max of the two instead of their
     # sum (per-verb timings in OPTIMIZATION_r14.md).
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_pop = pool.submit(
-            cli_main,
-            ["popularity", "--splits", split_dir, "--k", "100", "--out", pop_dir],
-        )
-        f_als = pool.submit(
-            cli_main,
+    fan_out(
+        spark.sparkContext,
+        popularity=lambda: cli_main(
+            ["popularity", "--splits", split_dir, "--k", "100", "--out", pop_dir]),
+        als=lambda: cli_main(
             ["als", "--splits", split_dir, "--rank", "8", "--max-iter", "4",
              "--reg", "0.1", "--k", "5", "--save-model", model_dir,
-             "--out", recs_dir],
-        )
-        try:
-            f_pop.result()
-            f_als.result()
-        except BaseException:
-            pool.shutdown(wait=False, cancel_futures=True)
-            raise
+             "--out", recs_dir]),
+    )
     # evaluate reuses ALL THREE upstream artifacts: the split verb's
     # partitioned parquet (--splits, round 10), the popularity verb's
     # top-100 table (--popularity, round 11 — without it the hit-ratio
@@ -202,14 +194,12 @@ def q_movielens_e2e_cli(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # fold the verb artifacts into the summary row.  The four fold-up
     # aggregates are independent small jobs over different artifacts;
-    # submit them from a thread pool so each job's straggler tail is
+    # run them from driver threads so each job's straggler tail is
     # back-filled by the next one's tasks (guide-§2.6 overlap).  The
     # three independent plans are built up front on this thread; the
     # dependent base-RMSE pair (mu collect -> scored_val aggregate) is
-    # inherently sequential, so it builds AND runs inside its own pool
-    # task (py4j plan construction is thread-safe).
-    from concurrent.futures import ThreadPoolExecutor
-
+    # inherently sequential, so it builds AND runs inside its own
+    # branch (py4j plan construction is thread-safe).
     labeled = spark.read.parquet(split_dir)
     counts_plan = labeled.groupBy("split").agg(F.count("*").alias("n"))
     pop_plan = spark.read.parquet(pop_dir).agg(
@@ -226,7 +216,7 @@ def q_movielens_e2e_cli(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ALS invariant baseline: train-global-mean RMSE on the same scored
     # subset the model was evaluated on (validation rows whose user AND
     # item appear in train == coldStartStrategy='drop').  mu -> base_rmse
-    # is a dependent pair, so it runs as one sequential task in the pool.
+    # is a dependent pair, so it runs as one sequential branch.
     train = labeled.filter(F.col("split") == "train")
     val = labeled.filter(F.col("split") == "validation")
 
@@ -241,22 +231,15 @@ def q_movielens_e2e_cli(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sqrt(F.avg(F.pow(F.col("rating") - F.lit(mu), 2)))
         ).collect()[0][0]
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_counts = pool.submit(counts_plan.collect)
-        f_pop = pool.submit(lambda: pop_plan.collect()[0])
-        f_recs = pool.submit(lambda: rec_stats_plan.collect()[0])
-        f_base = pool.submit(_base_rmse)
-        try:
-            counts = {r["split"]: r["n"] for r in f_counts.result()}
-            pop = f_pop.result()
-            rec_stats = f_recs.result()
-            base_rmse = f_base.result()
-        except BaseException:
-            # fail fast instead of letting the with-block's shutdown
-            # (wait=True) run every sibling job to completion before the
-            # error surfaces (round-13 advisory on the evaluate pool)
-            pool.shutdown(wait=False, cancel_futures=True)
-            raise
+    got = fan_out(
+        spark.sparkContext,
+        counts=counts_plan.collect,
+        pop=lambda: pop_plan.collect()[0],
+        recs=lambda: rec_stats_plan.collect()[0],
+        base=_base_rmse,
+    )
+    counts = {r["split"]: r["n"] for r in got["counts"]}
+    pop, rec_stats, base_rmse = got["pop"], got["recs"], got["base"]
 
     rmse, map_at_k = float(metrics["rmse"]), float(metrics["map_at_k"])
     shutil.rmtree(scratch, ignore_errors=True)

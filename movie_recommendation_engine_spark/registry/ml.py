@@ -103,8 +103,9 @@ def _fitted_als(spark: SparkSession, sf_dir: str) -> AlsRecommender:
             reg_param=0.1,
             seed=42,
             # block count sized to the data: ~50k ratings/block at sf0.1.
-            # ALS cost is block-to-block shuffles; default (= cores)
-            # makes hundreds of near-empty blocks. Raise with volume.
+            # ALS cost is block-to-block shuffles; the recommender's
+            # default (MLlib's 10, capped at the cores) is not sized
+            # from the data. Raise with volume.
             num_blocks=8,
         ).fit(train)
     return _ALS_CACHE[key]

@@ -17,7 +17,27 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def _cpus_from_env() -> int:
+    """``SPARK_GRAFT_CPUS`` as a positive core count (default 32).  A
+    malformed value fails naming the variable, at import, instead of
+    as a bare ``int()`` error."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        cpus = int(raw)
+    except ValueError:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be an integer core count (e.g. 8), got {raw!r}"
+        ) from None
+    if cpus <= 0:
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be > 0, got {raw!r} — unset it to use "
+            "the default of 32"
+        )
+    return cpus
+
+
+DEFAULT_SHUFFLE_PARTITIONS = _cpus_from_env()
 
 
 def get_spark(

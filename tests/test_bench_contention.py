@@ -86,3 +86,20 @@ def test_chosen_quiet_attempt_unmarks_contended():
         attempts[best]["host_load"], bench.MAX_ATTEMPTS, bench.MAX_ATTEMPTS
     )
     assert not contended
+
+
+def _load_bench(name: str):
+    s = importlib.util.spec_from_file_location(name, os.path.join(_ROOT, "bench.py"))
+    mod = importlib.util.module_from_spec(s)
+    s.loader.exec_module(mod)
+    return mod
+
+
+def test_max_attempts_clamped_to_one(monkeypatch):
+    # zero or negative attempts would leave no sweep to pick from, and
+    # the bench would crash before writing its artifact
+    for raw in ("0", "-2"):
+        monkeypatch.setenv("SPARK_GRAFT_BENCH_MAX_ATTEMPTS", raw)
+        assert _load_bench("bench_clamped").MAX_ATTEMPTS == 1
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_MAX_ATTEMPTS", "2")
+    assert _load_bench("bench_two").MAX_ATTEMPTS == 2

@@ -190,3 +190,26 @@ def test_arrow_dot_topk_empty_candidates(spark):
     c = spark.createDataFrame([], "id int, features array<float>")
     assert arrow_dot_topk(q, c, k=3).count() == 0
     assert arrow_dot_topk(q, c, k=3, as_lists=True).count() == 0
+
+
+def test_default_blocks_capped_at_session_cores(spark, ratings):
+    """Without ``num_blocks`` the fit uses MLlib's 10 blocks capped at
+    the session's cores — also when it runs on a pool thread, where
+    ``SparkSession.getActiveSession()`` is None.  An explicit count is
+    kept as given."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.ml.recommendation import ALS
+
+    want = min(ALS().getNumUserBlocks(), spark.sparkContext.defaultParallelism)
+    assert want < 10  # the test session's cores sit below MLlib's default
+
+    def parts(rec):
+        m = rec.model
+        return m.userFactors.rdd.getNumPartitions(), m.itemFactors.rdd.getNumPartitions()
+
+    assert parts(_fit(ratings)) == (want, want)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        assert pool.submit(lambda: parts(_fit(ratings))).result() == (want, want)
+    explicit = AlsRecommender(rank=4, max_iter=5, reg_param=0.1, seed=7, num_blocks=8)
+    assert parts(explicit.fit(ratings)) == (8, 8)
